@@ -29,6 +29,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# vocabulary size per document (V = this × n_docs) of the growth audit's
+# vocabulary-scaled corpora
+GROWTH_VOCAB_PER_DOC = 40.0
 
 
 def _sf_of(sf_dir: str) -> float:
@@ -200,7 +203,9 @@ def vocab_scaled_growth(spark, n_small: int = 500, n_big: int = 5000) -> dict:
 
     per_n: dict[int, dict[str, int]] = {}
     for n in (n_small, n_big):
-        docs = synthetic_documents(spark, n).localCheckpoint(eager=True)
+        docs = synthetic_documents(
+            spark, n, vocab_per_doc=GROWTH_VOCAB_PER_DOC
+        ).localCheckpoint(eager=True)
         g = hashed_shingle_table(docs, "doc_id", "text", n=7).localCheckpoint()
         per_n[n] = {
             "docs": n,
@@ -229,7 +234,7 @@ def vocab_scaled_growth(spark, n_small: int = 500, n_big: int = 5000) -> dict:
         return round(d[key] / allp, 6) if allp else 0.0
 
     return {
-        "vocab_per_doc": 40.0,
+        "vocab_per_doc": GROWTH_VOCAB_PER_DOC,
         "counts": per_n,
         "growth_exponent": {
             k: expo(k)

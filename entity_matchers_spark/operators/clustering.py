@@ -73,7 +73,8 @@ def connected_components(
     ~0.1 s collected). Identical output by construction — cluster_id is
     the component-minimum either way — and the distributed loop runs
     unchanged above the threshold, so the operator stays shape-correct at
-    any scale; the bound plays the same runtime-statistics role as AQE."""
+    any scale; the bound plays the same runtime-statistics role as AQE.
+    ``driver_max_edges=0`` always runs the distributed loop."""
     base = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     loop_parts: int | None = None
     if checkpoint:
@@ -83,7 +84,7 @@ def connected_components(
         # graph that is the entire LSH-join+verify, doubling its cost.
         base = base.localCheckpoint()
         n_edges = base.count()
-        if n_edges <= driver_max_edges:
+        if 0 < driver_max_edges and n_edges <= driver_max_edges:
             return _driver_union_find(base)
         sess_parts = int(base.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         loop_parts = min(sess_parts, 1 + n_edges // max(1, edges_per_loop_partition))
@@ -149,42 +150,41 @@ def connected_components(
 def _driver_union_find(base: DataFrame) -> DataFrame:
     """(id, cluster_id = component min) for a COLLECTED edge list — the
     small-graph fast path of :func:`connected_components`. Path-compressed
-    union-find; bounded by ``driver_max_edges`` rows (~MBs) at the caller."""
-    rows = base.collect()
+    union-find; bounded by ``driver_max_edges`` rows (~MBs) at the caller.
+
+    The labels go back as an Arrow table typed from the edge id type (longs
+    or ``"A:…"`` strings): ``createDataFrame(pa.Table)`` ships the batches
+    to the JVM directly, with no Spark job and no Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructField, StructType
+
     parent: dict = {}
 
     def find(x):
         root = x
-        while parent.get(root, root) != root:
+        while parent[root] != root:
             root = parent[root]
-        while parent.get(x, x) != x:  # path compression
+        while parent[x] != root:  # path compression
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        u, v = r[0], r[1]
+    for u, v in base.collect():
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
         ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[ru] = rv
-        parent.setdefault(u, find(u))
-        parent.setdefault(v, find(v))
-    comp_min: dict = {}
-    nodes = set()
-    for r in rows:
-        nodes.add(r[0]); nodes.add(r[1])
-    for n_ in nodes:
-        root = find(n_)
-        cur = comp_min.get(root)
-        if cur is None or n_ < cur:
-            comp_min[root] = n_
-    out = [(n_, comp_min[find(n_)]) for n_ in sorted(nodes)]
-    from pyspark.sql.types import StructField, StructType
-
+        if ru != rv:  # the smaller root wins, so every root is its component's min
+            parent[max(ru, rv)] = min(ru, rv)
+    ids = sorted(parent)
     id_type = base.schema[0].dataType
     schema = StructType(
         [StructField("id", id_type), StructField("cluster_id", id_type)]
     )
-    return base.sparkSession.createDataFrame(out, schema)
+    table = pa.Table.from_pydict(
+        {"id": ids, "cluster_id": [find(n_) for n_ in ids]},
+        schema=to_arrow_schema(schema),
+    )
+    return base.sparkSession.createDataFrame(table, schema)
 
 
 def clusters_with_singletons(

@@ -130,9 +130,9 @@ def score_pairs(
         norm.alias("norm_b"),
     )
     joined = pairs.join(a, "id_a").join(b, "id_b")
-    # identical strings shortcut: CASE short-circuits, so the quadratic
-    # levenshtein runs only when the canonical strings actually differ
-    # (near-dup-heavy inputs hit the fast branch often)
+    # identical canonical strings score 1.0. The CASE does not skip the
+    # Levenshtein UDF: Spark plans it into the one ArrowEvalPython node with
+    # the Jaro-Winkler and Jaccard UDFs, so _lev runs on every pair
     tslr = F.when(F.col("canon_a") == F.col("canon_b"), F.lit(1.0)).otherwise(
         levenshtein_ratio_fast("canon_a", "canon_b")
     )

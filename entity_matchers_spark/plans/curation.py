@@ -13,7 +13,7 @@ actually runs — the curation chain every open-data pipeline publishes
   → pack (deterministic global shuffle + sequence packing coordinates)
 
 Same checkpoint contract as the ER pipeline (it subclasses the stage
-runner): every stage commits a table + per-partition lineage/metrics, a
+runner): every stage commits a table + per-part-file lineage/metrics, a
 rerun resumes from the last committed stage with byte-identical output
 (all decisions are seeded-hash deterministic — no ``rand()`` anywhere).
 Reference analog for the stage-commit protocol: the pickle-per-stage

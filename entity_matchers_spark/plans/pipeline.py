@@ -5,20 +5,27 @@ files on disk (/root/reference/bert-int/run_full_bert.py:46-64; every
 interaction_model stage starts with pickle.load). The Spark-native analog:
 every stage writes a table + a metrics/lineage row; a rerun skips stages
 whose committed output exists (``_SUCCESS`` marker — the same contract an
-Iceberg snapshot commit provides; the writer format is a constructor arg so
-``iceberg`` slots in unchanged on a cluster with the runtime jar).
+Iceberg snapshot commit provides; the writer format is a config field, and
+any format that writes parquet ``part-*`` files keeps the footer lineage).
 
 Stages (SURVEY.md §7):
   extract → blocks → pairs → scores → matches → clusters
 
-Each stage records per-partition lineage (partition id → row count) plus
-wall-clock into ``<root>/_metrics/<stage>.json`` — the north rule's
-"per-partition lineage + metrics" requirement, and the analog of the
+Each stage records its lineage (written part file number → row count) plus
+wall-clock and schema into ``<root>/_metrics/<stage>.json`` — the north
+rule's "per-partition lineage + metrics" requirement, and the analog of the
 reference's blocking stats.csv audit (README.md:380-383).
+
+A commit costs exactly the write: the lineage comes from the parquet footers
+of the committed part files (read on the driver, no table re-scan), and a
+committed stage is read back with its recorded schema, so no schema-inference
+job runs. A metrics file without a schema (a root written before schemas were
+recorded) falls back to inference.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -26,6 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from entity_matchers_spark.extraction import with_extracted_text
 from entity_matchers_spark.operators import blocking, clustering, matching, scoring
@@ -71,18 +79,34 @@ class CheckpointedPipeline:
     def is_committed(self, stage: str) -> bool:
         return os.path.exists(f"{self._path(stage)}/_SUCCESS")
 
+    def _metrics_path(self, stage: str) -> str:
+        return f"{self.root}/_metrics/{stage}.json"
+
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.format(self.config.format).load(self._path(stage))
+        reader = self.spark.read
+        try:
+            with open(self._metrics_path(stage)) as f:
+                schema = json.load(f).get("schema")
+        except FileNotFoundError:
+            schema = None
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.format(self.config.format).load(self._path(stage))
+
+    def _part_rows(self, stage: str) -> dict[str, int]:
+        """Rows per written part file, keyed by its ``part-NNNNN`` number,
+        from the parquet footers on the driver (no Spark job)."""
+        import pyarrow.parquet as pq
+
+        rows: dict[str, int] = {}
+        for path in sorted(glob.glob(f"{self._path(stage)}/part-*")):
+            part = str(int(os.path.basename(path).split("-")[1]))
+            rows[part] = rows.get(part, 0) + pq.read_metadata(path).num_rows
+        return rows
 
     def _commit(self, stage: str, df: DataFrame, started: float) -> DataFrame:
         df.write.format(self.config.format).mode("overwrite").save(self._path(stage))
-        out = self.read(stage)
-        lineage = {
-            str(r["pid"]): r["rows"]
-            for r in out.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        }
+        lineage = self._part_rows(stage)
         metrics = {
             "stage": stage,
             "rows": sum(lineage.values()),
@@ -90,11 +114,16 @@ class CheckpointedPipeline:
             "partition_rows": lineage,
             "wall_sec": round(time.time() - started, 3),
             "config": {k: v for k, v in vars(self.config).items() if not isinstance(v, dict)},
+            "schema": df.schema.jsonValue(),
         }
         os.makedirs(f"{self.root}/_metrics", exist_ok=True)
-        with open(f"{self.root}/_metrics/{stage}.json", "w") as f:
+        # replaced atomically: a committed stage is read with the schema in
+        # this file, so a kill mid-write must not leave it truncated
+        tmp = f"{self._metrics_path(stage)}.tmp"
+        with open(tmp, "w") as f:
             json.dump(metrics, f, indent=2)
-        return out
+        os.replace(tmp, self._metrics_path(stage))
+        return self.read(stage)
 
     # -- stage bodies -------------------------------------------------------
 

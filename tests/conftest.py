@@ -7,7 +7,7 @@ import pytest
 def spark():
     from entity_matchers_spark.session import get_spark
 
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

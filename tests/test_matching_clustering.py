@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 from pyspark.sql import functions as F
 
+from entity_matchers_spark.operators import clustering
 from entity_matchers_spark.operators.clustering import (
     clusters_with_singletons,
     connected_components,
@@ -53,6 +56,11 @@ def test_csls_rescale(spark):
     assert got[(1, 11)] == pytest.approx(2 * 0.4 - 0.6 - 0.4)
 
 
+# Both connected-components paths: the default collects a small graph into a
+# driver-side union-find; driver_max_edges=0 forces the distributed loop.
+CC_PATHS = (200_000, 0)
+
+
 @pytest.mark.parametrize(
     "edges,expected",
     [
@@ -67,19 +75,35 @@ def test_csls_rescale(spark):
         ),
         # disjoint edge
         ([(1, 2), (7, 9)], {1: 1, 2: 1, 7: 7, 9: 7}),
+        # no edges
+        ([], {}),
+        # bipartite "A:…"/"B:…" string ids: the min is by string order
+        (
+            [("A:2", "B:1"), ("A:10", "B:1"), ("A:3", "B:7")],
+            {"A:2": "A:10", "A:10": "A:10", "B:1": "A:10", "A:3": "A:3", "B:7": "A:3"},
+        ),
     ],
 )
 def test_connected_components_shapes(spark, edges, expected):
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r.id: r.cluster_id for r in connected_components(df).collect()}
-    assert got == expected
+    id_type = "string" if edges and isinstance(edges[0][0], str) else "long"
+    df = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    for driver_max_edges in CC_PATHS:
+        cc = connected_components(df, driver_max_edges=driver_max_edges)
+        assert [f.dataType for f in cc.schema] == [df.schema["id_a"].dataType] * 2
+        got = {r.id: r.cluster_id for r in cc.collect()}
+        assert got == expected, driver_max_edges
 
 
-def test_clusters_with_singletons(spark):
+def test_clusters_with_singletons(spark, monkeypatch):
     all_ids = spark.createDataFrame([(i,) for i in range(6)], "id long")
     edges = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
-    got = {r.id: r.cluster_id for r in clusters_with_singletons(all_ids, edges).collect()}
-    assert got == {0: 0, 1: 1, 2: 1, 3: 3, 4: 3, 5: 5}
+    for driver_max_edges in CC_PATHS:
+        monkeypatch.setattr(
+            clustering, "connected_components",
+            functools.partial(connected_components, driver_max_edges=driver_max_edges),
+        )
+        got = {r.id: r.cluster_id for r in clusters_with_singletons(all_ids, edges).collect()}
+        assert got == {0: 0, 1: 1, 2: 1, 3: 3, 4: 3, 5: 5}, driver_max_edges
 
 
 def test_precision_recall_f1_with_train_exclusion(spark):
